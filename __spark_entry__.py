@@ -1650,14 +1650,15 @@ SELECT event_id, user_id, value FROM merged WHERE event_id % 11 <> 0
 def q_mor_upsert(spark, sf_dir):
     """A6/M6 merge-on-read write path (tablefmt.write_mor_upsert /
     write_mor_delete): an upsert commit materializes ONLY the delta —
-    upserted rows plus an equality-delete key file — and a delete
-    commit only keys; the read side resolves base minus deletes plus
-    delta per un-flattened commit (reference ``streaming_job.py:55-60``
-    Iceberg v2 merge-on-read TBLPROPERTIES; trade-off
+    the upserted rows, whose keys double as its equality deletes — and
+    a delete commit only keys; the read side resolves the whole chain
+    as one flat plan, a row surviving iff no LATER commit deletes its
+    key (reference ``streaming_job.py:55-60`` Iceberg v2 merge-on-read
+    TBLPROPERTIES; trade-off
     ``design_doc/PipelineArchitecture.md:235-238``).  Commit cost is
     O(|delta|) at any table size — the write-amplification answer for
     high-frequency upserts — and readers pay one broadcast anti-join
-    per commit until ``flatten_mor`` folds the chain.  The query
+    at any chain depth until ``flatten_mor`` folds the chain.  The query
     builds base -> MoR upsert -> MoR delete from deterministic event
     slices and returns the resolved table; the oracle is the
     whole-row MERGE the chain must equal."""

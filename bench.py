@@ -253,20 +253,6 @@ def main() -> None:
         spark.sparkContext._jvm.System.gc()
         return dt
 
-    def run_rebuild(build) -> float:
-        # escape hatch for any query whose PREBUILT plan would skip
-        # data work on re-execution (r7's checkpointed prefix sums were
-        # the case: re-saving them only read pinned blocks).  Rebuilds
-        # the whole query inside the clock — declare + build jobs +
-        # final plan.  Unused since the r8 literal-boundary rework
-        # (gated on df._rebuild_bench in the timing loop).
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        build().write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - t0
-        spark.sparkContext._jvm.System.gc()
-        return dt
-
     # DuckDB single-node oracle timings over the same parquet (the
     # baseline proxy: BASELINE.md documents that the reference
     # publishes no per-query numbers).  r8 (VERDICT r7 #1, the gate-
@@ -325,34 +311,18 @@ def main() -> None:
     # back-to-back r6 runs of identical code put the 30-query r3common
     # steady sum at 6.90 s and 7.24 s — a +-0.35 s ambient band the
     # pairing exists to cancel.
-    # Prefix-sum queries (r8): back to run_df.  r7 rebuild-timed them
-    # because their eager localCheckpoint HID the data path — re-saving
-    # the prebuilt plan only read pinned blocks.  The r8 literal-
-    # boundary rework removed the checkpoint: the prebuilt plan's noop
-    # save re-executes the FULL path (scan -> agg -> window; persists
-    # are cleared between runs), and the boundary/offset collects are
-    # driver-side plan CONSTANTS — the same accepted declare-time cost
-    # as q_knn_ivf's centroid literals and q_semdedup's seed sample,
-    # timed the same way.
+    # Prefix-sum queries: the prebuilt plan's noop save re-executes
+    # the FULL path (scan -> agg -> window; persists are cleared
+    # between runs), and the boundary/offset collects are
+    # plan-build CONSTANTS — the same accepted declare-time cost as
+    # q_knn_ivf's centroid literals and q_semdedup's seed sample.
     timings: dict[str, float] = {}
     steady: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
-    rebuild_timed: list[str] = []
     for name in BENCH_QUERIES:
         df = qs[name](spark, SF_DIR)
-        if getattr(df, "_rebuild_bench", None):
-            rebuild_timed.append(name)
-            # a query whose prebuilt plan would skip data work must be
-            # rebuilt inside the clock (no current operator sets this;
-            # kept as the honest-timing escape hatch)
-            timings[name] = round(run_rebuild(lambda: qs[name](spark, SF_DIR)), 4)
-            samples[name] = sorted(
-                round(run_rebuild(lambda: qs[name](spark, SF_DIR)), 4)
-                for _ in range(4)
-            )
-        else:
-            timings[name] = round(run_df(df), 4)
-            samples[name] = sorted(round(run_df(df), 4) for _ in range(4))
+        timings[name] = round(run_df(df), 4)
+        samples[name] = sorted(round(run_df(df), 4) for _ in range(4))
         steady[name] = samples[name][0]
         if con is not None and name in osql and name not in ORACLE_SKIP:
             # oracle timed IMMEDIATELY after the query's Spark samples:
@@ -378,8 +348,6 @@ def main() -> None:
     # min and median disagreed 28% in r8) toward the min.
     second_pass: dict[str, list[float]] = {}
     for name in R3_COMMON:
-        if name in rebuild_timed:
-            continue
         df = qs[name](spark, SF_DIR)
         sp = sorted(round(run_df(df), 4) for _ in range(6))
         second_pass[name] = sp
@@ -495,12 +463,9 @@ def main() -> None:
         "r3common_median_sum": round(r3_median_sum, 4),
         "r3common_oracle_sum": round(sum(oracle[n] for n in r3cov), 4),
         "r3common_queries": len(r3cov),
-        # queries whose steady time is BUILD-INCLUSIVE (run_rebuild) —
-        # empty since r8: the literal-boundary prefix sums re-execute
-        # their full data path from the prebuilt plan, and their
-        # boundary/offset collects are plan constants (the q_knn_ivf
-        # centroid precedent)
-        "rebuild_timed": rebuild_timed,
+        # no query's steady time is build-inclusive; the field stays
+        # so the line keeps its schema
+        "rebuild_timed": [],
         "oracle_skipped": ORACLE_SKIP,
         "oracle_asymmetry_notes": ORACLE_ASYMMETRY_NOTES,
         "steady_vs_oracle_ratio_excl_asymmetric": round(

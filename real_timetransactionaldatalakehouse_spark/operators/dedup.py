@@ -72,10 +72,7 @@ def _attach_layout(df: DataFrame, frames: list[DataFrame]) -> DataFrame:
     the literal-boundary rework the prebuilt plan re-executes its
     full data path on every run, so bench.run_df times these queries
     like any other and the build collects are declare-time constants
-    (the q_knn_ivf centroid precedent).  The (currently unused)
-    rebuild-timing escape hatch is ``df._rebuild_bench`` — set THAT
-    if a future operator's prebuilt plan would skip data work on
-    re-execution (bench.run_rebuild keys on it)."""
+    (the q_knn_ivf centroid precedent)."""
     df._layout_frames = frames
     return df
 
@@ -1168,11 +1165,10 @@ def _collapsed_graph(
 
     - ``memb`` — PERSISTED ``(id, __rep, __n)``, one row per input
       document: its exact-dup group representative (min id over equal
-      texts) and the group size.  r14 (guide §2.3/§2.4): computed with
-      ONE window over the text fingerprint instead of the pre-r14
-      groupBy + join-back — one corpus scan and one keyed exchange
-      where the old shape paid two scans, two exchanges and a
-      corpus-sized sort-merge join; group reps are
+      texts) and the group size.  A NULL text equals nothing, so each
+      NULL-text document is a singleton (own id, size 1).  Computed
+      with ONE window over the text fingerprint: one corpus scan and
+      one keyed exchange, no corpus-sized join; group reps are
       ``filter(id == __rep)`` over the same cached frame.  Callers
       attach ``memb`` as a cached dep (release via
       :func:`release_cached`).
@@ -1183,10 +1179,14 @@ def _collapsed_graph(
     from pyspark.sql import Window
 
     w = Window.partitionBy("__fp")
+    # NULL texts get a per-document fingerprint: md5 is hex, so the
+    # "null:" prefix cannot collide with a real text's
+    fp = F.coalesce(
+        F.md5(F.col(text_col)),
+        F.concat(F.lit("null:"), F.col(id_col).cast("string")),
+    )
     memb = (
-        df.select(
-            F.md5(F.col(text_col)).alias("__fp"), F.col(id_col).alias("id")
-        )
+        df.select(fp.alias("__fp"), F.col(id_col).alias("id"))
         .select(
             "id",
             F.min("id").over(w).alias("__rep"),

@@ -248,17 +248,18 @@ def dims_scd1_stream(
       (Iceberg v2 ``write.merge.mode = merge-on-read``,
       ``streaming_job.py:55-60``): the batch reads the current table
       to compute merged rows FOR THE TOUCHED KEYS ONLY, then commits
-      just that delta + equality-delete keys via
-      ``tablefmt.write_mor_upsert`` — write cost O(|batch|) per
-      commit at any table size, which is the whole point at CDC
-      upsert frequency.  SCD1 semantics (keep-latest dedup,
+      just that delta (its keys are the equality deletes) in one
+      write via ``tablefmt.write_mor_upsert`` — write cost
+      O(|batch|) per commit at any table size, which is the whole
+      point at CDC upsert frequency.  SCD1 semantics (keep-latest dedup,
       ``update_cols`` protection, null-coalesce to target values) are
       IDENTICAL: the delta rows are merge_upsert's output restricted
       to touched keys, not raw updates.  ``flatten_every=N`` folds
       the chain back to a full snapshot once N un-flattened MoR
-      commits accumulate — the compaction cadence that bounds
-      read-side merge joins, exactly as the reference's hourly
-      maintenance bounds Iceberg delete files.
+      commits accumulate — the compaction cadence that bounds the
+      delta and delete-key files every read scans (the read itself
+      is one broadcast anti-join at any depth), exactly as the
+      reference's hourly maintenance bounds Iceberg delete files.
 
     Either way readers never see a partial table and a crash
     mid-write leaves the previous snapshot current; old snapshots

@@ -29,7 +29,13 @@ Single-writer-per-table is assumed (matching the reference's one
 streaming job + one maintenance job per table); multi-writer commit
 coordination is exactly what a real table format adds on top.
 
-At scale: the pointer file is O(1); version dirs are independent
+A version may instead be a merge-on-read (MoR) commit: only the
+changed rows and delete keys, on top of an older version.  A read
+resolves the chain back to its last full snapshot as one flat plan,
+one broadcast anti-join at any depth; ``flatten_mor`` folds a chain
+into a full snapshot.
+
+At scale: the pointer file is O(1); full version dirs are independent
 parquet tables, so writes/reads shuffle nothing extra and partition
 pruning inside a version works as for any parquet dir.
 """
@@ -142,6 +148,11 @@ MOR_META = "_MOR.json"
 MOR_DELTA = "_delta"
 MOR_DELETES = "_deletes"
 
+#: The ``_versions/vNNNNNNNN/`` segment a data or key file sits under;
+#: the greedy ``.*`` takes the LAST one, so a table path that contains
+#: such a segment (or any ``/v1/``-style directory) cannot shadow it.
+_FILE_VERSION = rf".*/{VERSIONS_DIR}/v(\d{{8}})/"
+
 
 def mor_meta(path: str, version: int) -> dict | None:
     """The merge-on-read manifest of a version, or None for a full
@@ -153,47 +164,111 @@ def mor_meta(path: str, version: int) -> dict | None:
         return json.load(fh)
 
 
-def _read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
-    """Resolve a version to rows: full snapshots read directly; MoR
-    versions recursively resolve their base, apply the equality-delete
-    keys, and union the delta rows.  Chain depth = MoR commits since
-    the last full rewrite (``flatten_mor``), each costing one anti
-    join on the key columns — Iceberg v2's read-side trade, bounded by
-    compaction cadence exactly as the reference's maintenance job
-    bounds delete-file counts."""
-    vp = version_path(path, version)
-    meta = mor_meta(path, version)
-    if meta is None:
-        return spark.read.parquet(vp)
-    base = _read_version(spark, path, int(meta["base"]))
-    keys = list(meta["key_cols"])
-    dele = spark.read.parquet(os.path.join(vp, MOR_DELETES)).select(*keys)
-    # delete-key sets are delta-sized (the point of MoR is that the
-    # delta is small next to the table) — broadcast them so the base
-    # never shuffles on read; a delta large enough to break this is
-    # the signal to flatten instead
-    survivors = base.join(F.broadcast(dele), keys, "left_anti")
-    delta_p = os.path.join(vp, MOR_DELTA)
-    if os.path.isdir(delta_p):
-        delta = spark.read.parquet(delta_p)
-        survivors = survivors.unionByName(delta, allowMissingColumns=True)
-    return survivors
+def _mor_chain(path: str, version: int) -> tuple[int, list[int], list[str]]:
+    """Walk a version's ``_MOR.json`` files (plain file reads, no Spark
+    job): the full base snapshot it resolves through, its MoR levels
+    oldest first, and their key columns."""
+    levels, keys = [], set()
+    while (meta := mor_meta(path, version)) is not None:
+        levels.append(version)
+        keys.add(tuple(meta["key_cols"]))
+        version = int(meta["base"])
+    if len(keys) > 1:
+        raise ValueError(f"MoR chain under {path} mixes key columns {sorted(keys)}")
+    return version, levels[::-1], list(next(iter(keys), ()))
+
+
+def _read_version(
+    spark: SparkSession, path: str, version: int, fields: list[dict] | None
+) -> DataFrame:
+    """Resolve a version to rows as ONE flat plan at any chain depth.
+    Rows are the base snapshot plus a multi-path scan of every level's
+    ``_delta``; the build side is a multi-path scan of every level's
+    delete keys (an upsert delta's own keys are its equality deletes).
+    Each row and key is tagged with the version its file sits under.
+    A row written at version j survives iff no delete key from a LATER
+    version matches it (Iceberg v2: an equality delete applies to every
+    data file with a lower sequence number), so one broadcast LEFT ANTI
+    join on key equality AND ``delete_version > row_version`` resolves
+    the chain.  Delete keys are delta-sized, so the base never
+    shuffles; a delta too large to broadcast is the signal to flatten.
+
+    The row tag uses ``input_file_name()``, which Catalyst treats as
+    nondeterministic: that keeps the anti-join above the base/delta
+    union instead of planning it once per union branch, but filters on
+    an UNFLATTENED chain then run after the scan, not pushed into it.
+    With declared ``fields`` every file is read with them (no
+    inference job; missing columns read as nulls), else inference."""
+    base_v, levels, keys = _mor_chain(path, version)
+    reader = (
+        spark.read.schema(", ".join(f"`{f['name']}` {f['type']}" for f in fields))
+        if fields is not None else spark.read.option("mergeSchema", "true")
+    )
+    rows = reader.parquet(version_path(path, base_v))
+    if not levels:
+        return rows
+
+    def level_dirs(name: str) -> list[str]:
+        return [d for v in levels
+                if os.path.isdir(d := os.path.join(version_path(path, v), name))]
+
+    deltas = level_dirs(MOR_DELTA)
+    if deltas:
+        rows = rows.unionByName(reader.parquet(*deltas), allowMissingColumns=True)
+    rows = rows.withColumn(
+        "__rv", F.regexp_extract(F.input_file_name(), _FILE_VERSION, 1).cast("long"))
+    dk = [f"__k{i}" for i in range(len(keys))]
+    dele = reader.parquet(*deltas, *level_dirs(MOR_DELETES)).select(
+        *[F.col(k).alias(d) for k, d in zip(keys, dk)],
+        F.regexp_extract(F.col("_metadata.file_path"), _FILE_VERSION, 1)
+        .cast("long").alias("__dv"),
+    )
+    cond = [F.col(k) == F.col(d) for k, d in zip(keys, dk)]
+    cond.append(F.col("__dv") > F.col("__rv"))
+    return rows.join(F.broadcast(dele), cond, "left_anti").drop("__rv")
 
 
 def read_table(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
     """Read the current (or a pinned historical) snapshot, reconciled
     to the table's declared schema — a time-travel read after
     ``add_column`` sees the new column as null, exactly like the
-    current snapshot.  Merge-on-read versions are resolved (base minus
-    delete keys plus delta) transparently."""
+    current snapshot.  Merge-on-read versions are resolved (rows not
+    deleted by a later level of the chain) transparently."""
     v = current_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no _CURRENT pointer under {path}")
-    df = _read_version(spark, path, v)
     fields = declared_schema(path)
-    if fields is not None:
-        df = _reconcile(df, fields)
-    return df
+    df = _read_version(spark, path, v, fields)
+    return df if fields is None else _reconcile(df, fields)
+
+
+def _next_tmp(path: str) -> tuple[int, str]:
+    """The next version number and its in-flight ``.tmp`` dir."""
+    n = max(list_versions(path), default=0) + 1
+    return n, os.path.join(_versions_root(path), f".tmp-v{n:08d}")
+
+
+def _commit(path: str, tmp: str, n: int, df: DataFrame | None = None,
+            init_schema: bool = False) -> int:
+    """Publish a written ``tmp`` dir as version ``n``, then flip
+    ``_CURRENT`` with ``os.replace`` (atomic on POSIX).  In between,
+    the declared schema is initialized (``init_schema``, a first
+    commit) or APPENDED with ``df``'s new columns (mergeSchema-style:
+    existing columns keep type and order, old snapshots read the new
+    ones as nulls) — a crash before the flip leaves the old snapshot
+    current under a widened schema, never a half-visible state."""
+    os.rename(tmp, version_path(path, n))
+    fields = declared_schema(path)
+    if df is not None and (fields is not None or init_schema):
+        known = {f["name"] for f in fields or []}
+        new = [f for f in _fields_of(df) if f["name"] not in known]
+        if new:
+            _save_schema(path, (fields or []) + new)
+    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
+    with open(ptr_tmp, "w") as fh:
+        fh.write(str(n))
+    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
+    return n
 
 
 def write_version(
@@ -206,15 +281,10 @@ def write_version(
 
     The snapshot is written to a ``.tmp`` dir first; if ``expect_rows``
     is given the tmp output is counted BEFORE anything becomes visible
-    and a mismatch aborts (tmp removed, pointer untouched) — the
-    row-preservation guard the old rmtree-then-rename swap lacked.
-    The pointer flip is ``os.replace`` (atomic on POSIX): a crash at
-    any step leaves the previous snapshot current.
-    """
-    n = (max(list_versions(path), default=0)) + 1
-    root = _versions_root(path)
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, f".tmp-v{n:08d}")
+    and a mismatch aborts (tmp removed, pointer untouched).  A crash
+    at any step leaves the previous snapshot current."""
+    os.makedirs(_versions_root(path), exist_ok=True)
+    n, tmp = _next_tmp(path)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -226,27 +296,21 @@ def write_version(
             raise RuntimeError(
                 f"versioned write aborted: tmp has {got} rows, expected {expect_rows}"
             )
-    os.rename(tmp, version_path(path, n))
-    # schema-merge on write: initialize the declared schema on the first
-    # commit; later commits APPEND any new columns (mergeSchema-style
-    # evolution — existing columns keep their declared type and order,
-    # so old snapshots stay readable under the widened schema).  Updated
-    # before the pointer flip: a crash in between leaves the widened
-    # schema with the old snapshot current, which reads the new columns
-    # as nulls — never a half-visible state.
-    fields = declared_schema(path)
-    if fields is None:
-        _save_schema(path, _fields_of(df))
-    else:
-        known = {f["name"] for f in fields}
-        new = [f for f in _fields_of(df) if f["name"] not in known]
-        if new:
-            _save_schema(path, fields + new)
-    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
-    return n
+    return _commit(path, tmp, n, df, init_schema=True)
+
+
+def _mor_manifest(path: str, tmp: str, key_cols: list[str]) -> None:
+    """Start a MoR commit in a clean ``tmp`` dir: its ``_MOR.json``."""
+    base_v = current_version(path)
+    if base_v is None:
+        raise FileNotFoundError(
+            f"no _CURRENT under {path}: the first commit must be a full "
+            "write_version (MoR deltas need a base snapshot)"
+        )
+    shutil.rmtree(tmp, ignore_errors=True)  # a crashed attempt's leftovers
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, MOR_META), "w") as fh:
+        json.dump({"base": base_v, "key_cols": list(key_cols)}, fh, indent=1)
 
 
 def write_mor_upsert(
@@ -255,18 +319,14 @@ def write_mor_upsert(
     key_cols: list[str],
     deletes: DataFrame | None = None,
 ) -> int:
-    """Merge-on-read UPSERT commit: materialize only the DELTA — the
-    upserted rows plus an equality-delete key file — instead of
-    rewriting the table (reference ``streaming_job.py:55-60``
-    TBLPROPERTIES ``write.update.mode/write.merge.mode =
-    merge-on-read``; trade-off discussion
-    ``design_doc/PipelineArchitecture.md:235-238``).  At a
-    high-frequency upsert cadence this is the write-amplification
-    answer: commit cost is O(|delta|) regardless of table size, and
-    readers pay one broadcast anti-join per un-flattened MoR commit
-    (``flatten_mor`` is the compaction that folds the chain back to a
-    full snapshot, on the maintenance cadence that bounds Iceberg's
-    delete-file count).
+    """Merge-on-read UPSERT commit: ONE write of the delta — the
+    upserted rows — instead of a table rewrite (reference
+    ``streaming_job.py:55-60`` ``write.merge.mode = merge-on-read``;
+    trade-off ``design_doc/PipelineArchitecture.md:235-238``).  Commit
+    cost is O(|delta|) at any table size; readers resolve the chain
+    with one broadcast anti-join (:func:`_read_version`) until
+    ``flatten_mor`` folds it, on the maintenance cadence that bounds
+    Iceberg's delete-file count.
 
     Semantics: ``MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT
     MATCHED THEN INSERT *`` — matched keys take the update row
@@ -282,85 +342,38 @@ def write_mor_upsert(
     a delete-after-upsert batch can never resurrect the row).  Layout
     inside the version dir::
 
-        v0000000N/_MOR.json   {"base": M, "key_cols": [...], ...}
-        v0000000N/_delta/     parquet, the upserted rows
-        v0000000N/_deletes/   parquet, the equality-delete keys
+        v0000000N/_MOR.json   {"base": M, "key_cols": [...]}
+        v0000000N/_delta/     parquet, the upserted rows; their keys
+                              are this version's equality deletes
+        v0000000N/_deletes/   parquet, explicit delete keys (only when
+                              ``deletes`` is given)
 
-    Underscore names keep naive ``spark.read.parquet(version_dir)``
-    failing fast (no visible data files) — MoR versions are only
-    readable through :func:`read_table`'s resolution, like Iceberg
-    data files are only readable through a manifest."""
-    base_v = current_version(path)
-    if base_v is None:
-        raise FileNotFoundError(
-            f"no _CURRENT under {path}: the first commit must be a full "
-            "write_version (MoR deltas need a base snapshot)"
-        )
-    n = (max(list_versions(path), default=0)) + 1
-    root = _versions_root(path)
-    tmp = os.path.join(root, f".tmp-v{n:08d}")
+    Older versions also hold the delta keys in ``_deletes`` (and an
+    ``n_deletes`` count in ``_MOR.json``); they resolve identically.
+    Underscore names keep a naive ``spark.read.parquet(version_dir)``
+    failing fast: MoR versions are readable only through
+    :func:`read_table`, as Iceberg data files are only through a
+    manifest."""
+    n, tmp = _next_tmp(path)
+    _mor_manifest(path, tmp, key_cols)
     if deletes is not None:
-        # delete wins over a same-key update in the combined batch:
-        # without this anti-join the delta would be unioned back in
-        # AFTER the base anti-join and resurrect the deleted row
-        updates = updates.join(
-            F.broadcast(deletes.select(*key_cols).distinct()),
-            key_cols,
-            "left_anti",
-        )
-    updates.write.mode("overwrite").parquet(os.path.join(tmp, MOR_DELTA))
-    spark = updates.sparkSession
-    # delete keys come from the MATERIALIZED delta, not the updates
-    # plan: re-executing `updates` would resolve the whole MoR chain a
-    # second time per commit (the delta plan reads the current table)
-    del_keys = spark.read.parquet(os.path.join(tmp, MOR_DELTA)).select(*key_cols)
-    if deletes is not None:
-        del_keys = del_keys.unionByName(deletes.select(*key_cols))
-    del_keys = del_keys.distinct()
-    del_keys.write.mode("overwrite").parquet(os.path.join(tmp, MOR_DELETES))
-    n_deletes = spark.read.parquet(os.path.join(tmp, MOR_DELETES)).count()
-    meta = {"base": base_v, "key_cols": list(key_cols), "n_deletes": n_deletes}
-    with open(os.path.join(tmp, MOR_META), "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.rename(tmp, version_path(path, n))
-    # same mergeSchema-style evolution as write_version: the delta may
-    # carry new columns; old snapshots read them as typed nulls
-    fields = declared_schema(path)
-    if fields is not None:
-        known = {f["name"] for f in fields}
-        new = [f for f in _fields_of(updates) if f["name"] not in known]
-        if new:
-            _save_schema(path, fields + new)
-    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
-    return n
+        deletes = deletes.select(*key_cols)
+        # delete wins over a same-key update in the combined batch: the
+        # delta row would otherwise outlive the same-version delete key
+        updates = updates.join(F.broadcast(deletes), key_cols, "left_anti")
+        deletes.write.parquet(os.path.join(tmp, MOR_DELETES))
+    updates.write.parquet(os.path.join(tmp, MOR_DELTA))
+    return _commit(path, tmp, n, updates)
 
 
 def write_mor_delete(keys: DataFrame, path: str, key_cols: list[str]) -> int:
     """Merge-on-read DELETE commit: an equality-delete key file and no
     delta — O(|keys|) instead of a table rewrite (the reference's
     ``write.delete.mode = merge-on-read``)."""
-    base_v = current_version(path)
-    if base_v is None:
-        raise FileNotFoundError(f"no _CURRENT under {path}")
-    n = (max(list_versions(path), default=0)) + 1
-    root = _versions_root(path)
-    tmp = os.path.join(root, f".tmp-v{n:08d}")
-    del_keys = keys.select(*key_cols).distinct()
-    del_keys.write.mode("overwrite").parquet(os.path.join(tmp, MOR_DELETES))
-    spark = keys.sparkSession
-    n_deletes = spark.read.parquet(os.path.join(tmp, MOR_DELETES)).count()
-    meta = {"base": base_v, "key_cols": list(key_cols), "n_deletes": n_deletes}
-    with open(os.path.join(tmp, MOR_META), "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.rename(tmp, version_path(path, n))
-    ptr_tmp = os.path.join(path, f".{CURRENT_FILE}.tmp")
-    with open(ptr_tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(ptr_tmp, os.path.join(path, CURRENT_FILE))
-    return n
+    n, tmp = _next_tmp(path)
+    _mor_manifest(path, tmp, key_cols)
+    keys.select(*key_cols).write.parquet(os.path.join(tmp, MOR_DELETES))
+    return _commit(path, tmp, n)
 
 
 def flatten_mor(spark: SparkSession, path: str) -> int:
@@ -374,32 +387,18 @@ def flatten_mor(spark: SparkSession, path: str) -> int:
 
 def mor_chain_depth(path: str, version: int | None = None) -> int:
     """Number of un-flattened MoR commits the given (default: current)
-    version resolves through — 0 for a full snapshot.  Every level
-    authors one broadcast anti-join (``_read_version``), and after
-    Catalyst pushes the anti-joins through the accumulated union the
-    OPTIMIZED plan holds depth*(depth+1)/2 join nodes — execution
-    stays ~linear in data (each union branch streams through tiny
-    broadcast filters) but plan build/codegen cost is QUADRATIC in
-    depth.  This is the metric a maintenance cadence bounds: keep it
-    under ``MOR_MAX_CHAIN`` (tests/test_tablefmt.py::
-    test_mor_read_plan_depth_contract pins the shape at depth 20)."""
+    version resolves through — 0 for a full snapshot.  The read plan is
+    one broadcast anti-join at any depth; depth sets how many delta and
+    delete-key directories a read scans and lists.  This is the metric
+    a maintenance cadence bounds: keep it under ``MOR_MAX_CHAIN``."""
     v = current_version(path) if version is None else version
-    depth = 0
-    while v is not None:
-        meta = mor_meta(path, v)
-        if meta is None:
-            break
-        depth += 1
-        v = int(meta["base"])
-    return depth
+    return 0 if v is None else len(_mor_chain(path, v)[1])
 
 
-# Recommended flatten trigger: the optimized read plan holds
-# depth*(depth+1)/2 broadcast anti-join nodes (Catalyst pushes each
-# level's anti-join through the accumulated union), so plan size is
-# quadratic in depth.  8 -> 36 join nodes keeps plan build trivial
-# while amortizing the full-rewrite amplification over 8 O(|delta|)
-# commits (SCALING.md r8 MoR table).
+# Recommended flatten trigger.  The read plan does not grow with depth;
+# the chain bound limits the files a read scans (one delta and/or one
+# delete-key dir per level) while amortizing the full-rewrite
+# amplification over 8 O(|delta|) commits (SCALING.md r8 MoR table).
 MOR_MAX_CHAIN = 8
 
 

@@ -1629,6 +1629,31 @@ def test_embed_neardup_lsh_max_bucket(spark, sf_small):
     assert capped, "tiny cap still finds in-subcell pairs"
 
 
+def test_null_texts_are_exact_dup_singletons(spark):
+    """A NULL text equals nothing, so NULL-text documents never
+    collapse into one exact-dup group: none is a near-dup loser, none
+    forms a cluster, and real duplicates around them still collapse."""
+    dup = " ".join(f"tok{i}" for i in range(30))
+    other = " ".join(f"word{i}" for i in range(30))
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, dup), (4, dup), (5, None), (6, other),
+         (7, None)],
+        "doc_id long, text string",
+    )
+    losers = {r.doc_id for r in D.neardup_losers(df).collect()}
+    assert losers == {4}
+    clusters = {
+        r.id: (r.cluster_id, r.n_members)
+        for r in D.verified_neardup_clusters(df).collect()
+    }
+    assert clusters == {3: (3, 2), 4: (3, 2)}
+    kept = {r.doc_id for r in D.drop_near_duplicates(df).collect()}
+    assert kept == {1, 2, 3, 5, 6, 7}
+    # the split-key path: each NULL doc keys on itself, not on a group
+    keys = {r.doc_id: r["__cluster_key"] for r in D.neardup_cluster_keys(df).collect()}
+    assert keys == {1: 1, 2: 2, 3: 3, 4: 3, 5: 5, 6: 6, 7: 7}
+
+
 def test_minhash_tolerates_null_text(spark):
     """r9 review fix: a NULL-text row must not kill the Arrow MinHash
     kernel (np.asarray(None) raised TypeError and aborted the stage).

@@ -621,21 +621,15 @@ def test_maintenance_loop_drives_mor_flatten_trigger(spark, tmp_path):
 
 
 def test_mor_read_plan_depth_contract(spark, tmp_path):
-    """Contract for the MoR read path at pathological chain depth
-    (~20, the reader a missed flatten produces).  The resolution
-    AUTHORS one broadcast anti-join per un-flattened commit, but
-    Catalyst's PushdownLeftSemiAntiJoin then pushes every level's
-    anti-join through the accumulated union — the OPTIMIZED plan holds
-    d*(d+1)/2 broadcast anti-joins (each union branch filtered by all
-    later delete sets independently: execution cost stays ~linear in
-    DATA — base rows stream through d tiny broadcast filters, delta_k
-    rows through d-k — but plan build/codegen cost is QUADRATIC in
-    depth).  That quadratic plan growth is the measured 'or else' for
-    the flatten cadence: MOR_MAX_CHAIN (8 -> 36 join nodes) keeps it
-    trivial, depth 20 -> 210 nodes is still seconds, depth 100 ->
-    5050 would dominate the read.  Every join must stay broadcast —
+    """The MoR read plan is FLAT in chain depth: one broadcast LEFT
+    ANTI join against a multi-path scan of every level's delete keys
+    resolves the whole chain, the same single join at depth 2 as at a
+    pathological depth 20 (the reader a missed flatten produces), and
     never a shuffle join."""
     from real_timetransactionaldatalakehouse_spark import plans as P
+
+    def tree(df):
+        return P.formatted_plan(df).split("\n\n")[0]  # tree section
 
     tbl = str(tmp_path / "tbl")
     TF.write_version(spark.range(0, 500).selectExpr("id", "id AS v"), tbl)
@@ -645,13 +639,16 @@ def test_mor_read_plan_depth_contract(spark, tmp_path):
             spark.createDataFrame([(k, k * 100)], "id long, v long"),
             tbl, ["id"],
         )
+        if k == 1:
+            plan = tree(TF.read_table(spark, tbl))
+            assert plan.count("BroadcastHashJoin LeftAnti") == 1, plan
+            assert "SortMergeJoin" not in plan, plan
     assert TF.mor_chain_depth(tbl) == depth
     t0 = time.monotonic()
     df = TF.read_table(spark, tbl)
-    plan = P.formatted_plan(df).split("\n\n")[0]  # tree section
-    expect = depth * (depth + 1) // 2
-    assert plan.count("BroadcastHashJoin") == expect, plan
-    assert plan.count("LeftAnti") == expect, plan
+    plan = tree(df)
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("LeftAnti") == 1, plan
     assert "SortMergeJoin" not in plan, plan
     rows = {(r.id, r.v) for r in df.collect()}
     wall = time.monotonic() - t0
@@ -659,11 +656,152 @@ def test_mor_read_plan_depth_contract(spark, tmp_path):
         (k, k * 100) for k in range(depth)
     }
     assert rows == want
-    # bounded: plan build + execution at depth 20 on local[32] stays
-    # well under a minute (measured ~2-8 s; the assert is a regression
-    # tripwire for accidental quadratic recursion, not a benchmark)
+    # a regression tripwire for per-level plan growth, not a benchmark
     assert wall < 60, wall
     assert TF.MOR_MAX_CHAIN <= depth // 2
+
+
+def _rows_by_id(df):
+    cols = [c for c in ("s", "v", "extra") if c in df.columns]
+    return {
+        r.id: tuple(r[c] for c in cols) + (None,) * (3 - len(cols))
+        for r in df.collect()
+    }
+
+
+def test_mor_chain_matches_dict_model(spark, tmp_path):
+    """A seeded sequence of MoR commits — upserts, deletes, a
+    delete-then-reinsert of one key, combined upsert+delete batches
+    (the delete wins), a delta that adds a column, and a flatten with
+    commits on top — reads back exactly a Python dict model at every
+    version, the current one and every earlier one by time travel."""
+    import random
+
+    rng = random.Random(7)
+    tbl = str(tmp_path / "tbl")
+    model = {i: (f"s{i}", i, None) for i in range(40)}
+    TF.write_version(
+        spark.createDataFrame(
+            [(i, s, v) for i, (s, v, _e) in model.items()],
+            "id long, s string, v long",
+        ),
+        tbl,
+    )
+    states = {1: dict(model)}
+    has_extra = False
+
+    def upsert(ids, deletes=(), tag="u"):
+        nonlocal has_extra
+        ids = sorted(set(ids))
+        if has_extra:
+            rows = [(i, f"{tag}{i}", i * 10, i * 7) for i in ids]
+            df = spark.createDataFrame(rows, "id long, s string, v long, extra long")
+        else:
+            rows = [(i, f"{tag}{i}", i * 10) for i in ids]
+            df = spark.createDataFrame(rows, "id long, s string, v long")
+        dele = (spark.createDataFrame([(i,) for i in deletes], "id long")
+                if deletes else None)
+        v = TF.write_mor_upsert(df, tbl, ["id"], deletes=dele)
+        for r in rows:
+            model[r[0]] = tuple(r[1:]) + ((None,) if len(r) == 3 else ())
+        for i in deletes:
+            model.pop(i, None)
+        return v
+
+    def delete(ids):
+        v = TF.write_mor_delete(
+            spark.createDataFrame([(i,) for i in ids], "id long"), tbl, ["id"]
+        )
+        for i in ids:
+            model.pop(i, None)
+        return v
+
+    def check(v):
+        states[v] = dict(model)
+        assert _rows_by_id(TF.read_table(spark, tbl)) == model, v
+
+    check(upsert(rng.sample(range(60), 8)))                     # v2
+    check(delete([3] + rng.sample(range(40), 4) + [999]))       # v3
+    check(upsert([3, 41], tag="back"))                          # v4: 3 reinserted
+    both = rng.sample(sorted(model), 3)
+    check(upsert(both + [50, 51], deletes=both + [5]))          # v5: deletes win
+    has_extra = True
+    check(upsert(rng.sample(sorted(model), 5) + [70]))          # v6: new column
+    check(delete(rng.sample(sorted(model), 3)))                 # v7
+    check(upsert([3, 7, 80], tag="again"))                      # v8
+    v = TF.flatten_mor(spark, tbl)                              # v9: full
+    assert TF.mor_meta(tbl, v) is None
+    check(v)
+    check(upsert(rng.sample(sorted(model), 4) + [90], deletes=[7]))  # v10
+    check(delete([3]))                                          # v11
+    check(upsert([3], tag="third"))                             # v12
+    check(upsert(rng.sample(range(100), 10), deletes=[80, 90]))  # v13
+    assert TF.mor_chain_depth(tbl) == 4
+    assert sorted(states) == TF.list_versions(tbl)
+    for ver, want in states.items():
+        got = _rows_by_id(TF.read_table(spark, tbl, version=ver))
+        assert got == want, ver
+
+
+def test_mor_old_layout_versions_read_identically(spark, tmp_path):
+    """Versions written when an upsert also wrote its delta keys into
+    ``_deletes`` (with ``n_deletes`` in ``_MOR.json``) resolve to the
+    same rows as the delta-only layout."""
+    import json as _json
+    import shutil as _shutil
+
+    tbl = str(tmp_path / "tbl")
+    TF.write_version(
+        spark.createDataFrame([(i, i) for i in range(10)], "id long, v long"), tbl
+    )
+    TF.write_mor_upsert(
+        spark.createDataFrame([(1, 100), (20, 200)], "id long, v long"), tbl, ["id"]
+    )
+    TF.write_mor_upsert(
+        spark.createDataFrame([(2, 300), (1, 101)], "id long, v long"), tbl, ["id"],
+        deletes=spark.createDataFrame([(2,), (4,)], "id long"),
+    )
+    TF.write_mor_delete(spark.createDataFrame([(20,)], "id long"), tbl, ["id"])
+    before = {v: _rows_by_id(TF.read_table(spark, tbl, version=v)) for v in (2, 3, 4)}
+    assert before[4] == {
+        i: (101 if i == 1 else i, None, None) for i in range(10) if i not in (2, 4)
+    }
+    # a copy never read before, so no file listing of it is cached
+    old = str(tmp_path / "old")
+    _shutil.copytree(tbl, old)
+    for v in (2, 3):  # rewrite both upserts in the old layout
+        src_vp, vp = TF.version_path(tbl, v), TF.version_path(old, v)
+        keys = spark.read.parquet(os.path.join(src_vp, "_delta")).select("id")
+        if os.path.isdir(os.path.join(src_vp, "_deletes")):
+            keys = keys.unionByName(
+                spark.read.parquet(os.path.join(src_vp, "_deletes"))
+            ).distinct()
+        _shutil.rmtree(os.path.join(vp, "_deletes"), ignore_errors=True)
+        keys.write.parquet(os.path.join(vp, "_deletes"))
+        meta = TF.mor_meta(old, v)
+        meta["n_deletes"] = keys.count()
+        with open(os.path.join(vp, "_MOR.json"), "w") as fh:
+            _json.dump(meta, fh)
+    assert TF.mor_meta(old, 2)["n_deletes"] == 2
+    assert TF.mor_meta(old, 3)["n_deletes"] == 3
+    after = {v: _rows_by_id(TF.read_table(spark, old, version=v)) for v in (2, 3, 4)}
+    assert after == before
+
+
+def test_mor_read_table_path_with_version_like_segments(spark, tmp_path):
+    """Row and key versions come from the table's own
+    ``_versions/vNNNNNNNN/`` segment, not from any ``/v1/``-style (or
+    even ``_versions/v...``) directory higher up the table path."""
+    tbl = str(tmp_path / "v1" / "_versions" / "v00000099" / "tbl")
+    TF.write_version(
+        spark.createDataFrame([(1, 1), (2, 2), (3, 3)], "id long, v long"), tbl
+    )
+    TF.write_mor_upsert(
+        spark.createDataFrame([(2, 20), (4, 40)], "id long, v long"), tbl, ["id"]
+    )
+    TF.write_mor_delete(spark.createDataFrame([(3,)], "id long"), tbl, ["id"])
+    got = {(r.id, r.v) for r in TF.read_table(spark, tbl).collect()}
+    assert got == {(1, 1), (2, 20), (4, 40)}
 
 
 def test_reader_snapshot_isolation_across_maintenance(spark, tmp_path):

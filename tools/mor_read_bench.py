@@ -1,18 +1,16 @@
 #!/usr/bin/env python
-"""Measure the MoR READ path between flattens at replica scale
-(VERDICT r8 #6): the write-amp bench justified the delta write path
-(6.24x fewer bytes than CoW), but the flatten cadence `MOR_MAX_CHAIN`
-was justified only by plan-node counts (d(d+1)/2 broadcast anti-joins
-after Catalyst's PushdownLeftSemiAntiJoin).  This records what a
-READER actually pays at each chain depth, so the recommended depth is
-re-derived from a measurement:
+"""Measure the MoR READ path between flattens at replica scale: what a
+READER pays at each chain depth, so the flatten cadence
+`MOR_MAX_CHAIN` is derived from a measurement.  The read plan is one
+broadcast anti-join at any depth; depth adds delta and delete-key
+files to its scans.
 
 - full scan: ``read_table`` -> noop sink (plan BUILD INCLUDED in the
-  clock — the quadratic join authoring is a real per-read cost a
-  fresh reader pays; steady re-executions are reported separately),
+  clock — a fresh reader pays it; steady re-executions are reported
+  separately),
 - point lookup: resolve-then-filter on 100 keys, ``collect()``
-  (the serving-layer shape: the merge anti-joins cannot be pruned
-  below the resolution, so the lookup pays the chain too),
+  (the serving-layer shape: the filter runs above the resolution, so
+  the lookup pays the chain too),
 - depth 0 baseline: the same table after ``flatten_mor``.
 
 Scale: --keys 750000 (~50x the sf0.1 customer dimension, the same
